@@ -23,8 +23,6 @@ object Families {
       family("graph", GraphOps.prewarmShared, GraphOps.specs))
   }
 
-  def names: Seq[String] = all.map(_.name)
-
   /** Families whose snapshots at least one of `queries` consumes. */
   def consumedBy(queries: Iterable[String]): Seq[Family] = {
     val qs = queries.toSet

@@ -29,7 +29,7 @@ object Main {
     val expected = Expected.load(args.root.resolve("expected/fingerprints.tsv"))
     val outcome = args.workload match {
       case "etl_release" => new Release(args, expected).run()
-      case w @ ("suite_floor" | "suite_iter") => new Suite(args, w, expected).run()
+      case "suite_iter" => new Suite(args, expected).run()
       case w => sys.error(s"unknown workload $w")
     }
     val metrics = Json.obj(Metrics.select(args.trace, outcome.values).map { case (n, v, unit) =>

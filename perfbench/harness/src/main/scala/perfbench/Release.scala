@@ -150,7 +150,7 @@ final class Release(args: Main.Args, expected: Map[String, String]) {
 object Release {
   /** Warm cycles every run makes and `pass_s` summarises: a fixed window,
     * so a fast run's extra, warmer cycles do not pull its median down. */
-  val WarmCycles = 2
+  val WarmCycles = 3
 
   /** Source files whose stage call sites split a `Runner.run` span into
     * sink writes (`Sink.scala`) and the read-back count (`Runner.scala`). */

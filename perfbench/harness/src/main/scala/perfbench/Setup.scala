@@ -2,45 +2,36 @@ package perfbench
 
 import org.apache.spark.sql.SparkSession
 
-/** Set-up: session start, then the prewarm of the workload's families. The
-  * whole set-up runs [[Repeats]] times, stopping the session in between, and
-  * the median is reported; the last session is the one the workload uses. */
+/** Set-up: session start, then the prewarm of the workload's families, once,
+  * in the run's fresh JVM. The cold set-up is what every process pays, so it
+  * is the one reported; the session it starts is the one the workload uses. */
 object Setup {
-  val Repeats = 3
-
   final case class Result(seconds: Double, prewarm: Seq[(String, Double)])
 
   val PrewarmOp = 1L
 
   def run(args: Main.Args, prewarms: Seq[(String, (SparkSession, String) => Unit)],
       dataDir: String): (SparkSession, Option[Tracer], Result) = {
-    var last: (SparkSession, Option[Tracer], Seq[(String, Double)]) = null
-    val samples = (1 to Repeats).map { i =>
-      if (last != null) last._1.stop()
-      val t0 = System.nanoTime()
-      val spark = Harness.session(args.work)
-      val sessionSec = Harness.seconds(t0)
-      val tracer = if (args.trace) {
-        val t = new Tracer(spark.sparkContext, Release.SplitFiles)
-        spark.sparkContext.addSparkListener(t)
-        t.spans += Span(0L, "session", s"start $i", t0, t0 + (sessionSec * 1e9).toLong)
-        Some(t)
-      } else None
-      val families = prewarms.map { case (name, f) =>
-        val tf = System.nanoTime()
-        Tracing(tracer, PrewarmOp).span("prewarm", name)(f(spark, dataDir))
-        name -> Harness.seconds(tf)
-      }
-      last = (spark, tracer, families)
-      Harness.mark(f"set-up $i: session $sessionSec%.2f s, prewarm ${families.map(_._2).sum}%.2f s")
-      Harness.seconds(t0)
+    val t0 = System.nanoTime()
+    val spark = Harness.session(args.work)
+    val sessionSec = Harness.seconds(t0)
+    val tracer = if (args.trace) {
+      val t = new Tracer(spark.sparkContext, Release.SplitFiles)
+      spark.sparkContext.addSparkListener(t)
+      t.spans += Span(0L, "session", "start", t0, t0 + (sessionSec * 1e9).toLong)
+      Some(t)
+    } else None
+    val families = prewarms.map { case (name, f) =>
+      val tf = System.nanoTime()
+      Tracing(tracer, PrewarmOp).span("prewarm", name)(f(spark, dataDir))
+      name -> Harness.seconds(tf)
     }
-    Harness.mark("set up")
-    (last._1, last._2, Result(Harness.median(samples), last._3))
+    val seconds = Harness.seconds(t0)
+    Harness.mark(f"set up: session $sessionSec%.2f s, prewarm ${families.map(_._2).sum}%.2f s")
+    (spark, tracer, Result(seconds, families))
   }
 
-  /** The `prewarm.*` per-layer metrics; families the workload does not
-    * consume read 0. */
+  /** The `prewarm.*` per-layer metrics of the families the workload prewarms. */
   def prewarmMetrics(tr: Tracer, setup: Result, cacheMb: Double): Map[String, Double] =
     setup.prewarm.map { case (f, s) => s"prewarm.${f}_s" -> s }.toMap ++ Map(
       "prewarm.jobs" -> tr.counter(Tracer.key(PrewarmOp, "prewarm")).jobs.get.toDouble,

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-/** `suite_floor` / `suite_iter`: the workload's measured queries in seeded
+/** `suite_iter`: the measured queries of the `suite_iter` list in seeded
   * order, pass after pass, until the measured time reaches `--seconds`, and
   * for at least [[Suite.WarmPasses]] warm passes.
   * Pass 0 runs cold, right after set-up; later passes are warm. A query is
@@ -14,7 +14,8 @@ import scala.jdk.CollectionConverters._
   * A traced run traces pass 0 and every even pass, and leaves the odd ones
   * untraced so the tracing overhead can be measured.
   */
-final class Suite(args: Main.Args, workload: String, expected: Map[String, String]) {
+final class Suite(args: Main.Args, expected: Map[String, String]) {
+  private val workload = "suite_iter"
   private val dataDir = args.root.resolve("data").resolve(Suite.Scale).toString
 
   private def lines(name: String): Seq[String] =

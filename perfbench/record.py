@@ -14,10 +14,9 @@ import os
 import sys
 
 BENCH = os.path.dirname(os.path.abspath(__file__))
-# Families whose prewarm is cheap enough to repeat in every set-up; the
-# measured queries are drawn from their queries and from snapshot-free ones.
+# Families whose prewarm is cheap enough for every set-up; the measured
+# queries are drawn from their queries and from snapshot-free ones.
 CHEAP_FAMILIES = {"-", "relational"}
-FLOOR_STRIDE = 14
 # The iterative queries suite_iter runs: the connected-components fixpoint,
 # the blocking-key loop and the sorted-neighbourhood pass, all snapshot-free
 # or relational, about five seconds per warm pass together.
@@ -59,18 +58,12 @@ def main():
                "changes do not move a query between lists.", cols],
               [f"{q}\t{sf01[q]['family']}\t{sf01[q]['build_jobs']}" for q in members])
     cheap = lambda q: sf01[q]["family"] in CHEAP_FAMILIES
-    floor_measured = [q for q in floors if cheap(q)][::FLOOR_STRIDE]
-    iter_measured = ITER_MEASURED
-    if not all(q in iters and cheap(q) for q in iter_measured):
+    if not all(q in iters and cheap(q) for q in ITER_MEASURED):
         sys.exit("a measured suite_iter query is no longer an eligible suite_iter member")
-    write("suites/suite_floor.measured.txt",
-          [f"suite_floor runs every {FLOOR_STRIDE}th suite_floor member, in name order,",
-           "among those with no snapshot family or the relational one."],
-          floor_measured)
     write("suites/suite_iter.measured.txt",
           ["suite_iter runs these suite_iter members: iterative queries with no",
            "snapshot family or the relational one, ~5 s per warm pass together."],
-          iter_measured)
+          ITER_MEASURED)
     with open(os.path.join(BENCH, "expected", "fingerprints.tsv")) as fh:
         kept = [l for l in fh if l.strip() and not l.startswith("#")
                 and not l.startswith("sf0.01/")]
@@ -79,8 +72,7 @@ def main():
            "sf0.01/* come from a probe whose outputs scripts/check.py passed",
            "against DuckDB; etl_release/* from perfbench.RecordRelease."],
           [f"sf0.01/{q}\t{sf001[q]['fingerprint']}" for q in names] + [l.rstrip("\n") for l in kept])
-    print(f"suite_floor {len(floors)} ({len(floor_measured)} measured), "
-          f"suite_iter {len(iters)} ({len(iter_measured)} measured)")
+    print(f"suite_floor {len(floors)}, suite_iter {len(iters)} ({len(ITER_MEASURED)} measured)")
 
 
 if __name__ == "__main__":

@@ -23,7 +23,7 @@ ROOT = os.path.dirname(BENCH)
 HARNESS = os.path.join(BENCH, "harness")
 WORK = os.path.join(BENCH, ".work")
 STAMP = os.path.join(HARNESS, "target", "perfbench-build.json")
-WORKLOADS = ("etl_release", "suite_floor", "suite_iter")
+WORKLOADS = ("etl_release", "suite_iter")
 BUILD_TIMEOUT_S = 840
 RUN_TIMEOUT_S = 170
 JVM_OPENS = [

@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** The Adult Cancer Survival ("Table 4") pipeline — reference
   * src/main.py:222-376 as one lazy chain: filters → carve → stamps →
-  * 5 generalisation unions → unpivot → metric-name cleanup → load
-  * projection. Still shuffle-free (unions and unpivot are narrow); the
-  * unpivot doubles rows, which at 100 TB argues for keeping it late —
-  * as the reference does — so upstream filters run on the narrow table.
+  * 5 generalisation explodes → unpivot → metric-name cleanup → load
+  * projection. Shuffle- and union-free (explodes and unpivot are narrow),
+  * so the sheet is scanned once; the unpivot doubles rows, which at
+  * 100 TB argues for keeping it late — as the reference does — so
+  * upstream filters run on the narrow table.
   */
 object Adult4Pipeline {
 

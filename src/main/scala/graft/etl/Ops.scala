@@ -5,33 +5,48 @@ import org.apache.spark.sql.functions._
 
 /** Reusable operator combinators — the reference's signature moves
   * (SURVEY.md §2.3) as thin, composable functions over DataFrames. All are
-  * narrow ops (filter/project/union): no shuffle, one codegen stage.
+  * narrow ops (filter/project/explode): no shuffle, no union, one codegen
+  * stage over one scan of the source.
   */
 object Ops {
 
-  /** R1 — generalise-and-keep (reference src/main.py:98-105): copy the rows
-    * matching `pred`, overwrite columns per `overrides`, append the copies;
-    * originals are KEPT. */
-  def duplicateWhere(df: DataFrame, pred: Column, overrides: Map[String, Column]): DataFrame = {
-    val dupe = overrides.foldLeft(df.filter(pred)) {
-      case (acc, (c, v)) => acc.withColumn(c, v)
-    }
-    df.unionByName(dupe)
-  }
+  /** R1 — generalise-and-keep (reference src/main.py:98-105): every row
+    * matching `pred` gains a copy with columns overwritten per
+    * `overrides`; originals are KEPT. One narrow explode emits each row
+    * once, or twice when it matches. A chained rule sees earlier copies as
+    * ordinary rows, so a copy can be copied again. */
+  def duplicateWhere(df: DataFrame, pred: Column, overrides: Map[String, Column]): DataFrame =
+    generalise(df, pred, overrides, keepOriginal = true)
 
   /** R2 — generalise-and-replace (reference src/main.py:136-146): like
     * [[duplicateWhere]] but the matching originals are REMOVED — the
     * deliberate asymmetry between the Index pipeline's Breast handling and
-    * the Adult pipeline's gender generalisation. */
-  def replaceWhere(df: DataFrame, pred: Column, overrides: Map[String, Column]): DataFrame = {
-    val dupe = overrides.foldLeft(df.filter(pred)) {
-      case (acc, (c, v)) => acc.withColumn(c, v)
-    }
-    // !(pred <=> true), not !pred: under three-valued logic a NULL cell makes
-    // !pred NULL and filter() would silently DROP the row, where the
-    // reference's pandas ~((..)&(..)) keeps NaN rows. Null-safe equality
-    // keeps the keep-side semantics identical on blank workbook cells.
-    df.filter(!(pred <=> true)).unionByName(dupe)
+    * the Adult pipeline's gender generalisation. A pure projection. */
+  def replaceWhere(df: DataFrame, pred: Column, overrides: Map[String, Column]): DataFrame =
+    generalise(df, pred, overrides, keepOriginal = false)
+
+  private val Copy = "__ops_copy"
+
+  /** Tags each output row as a copy (or not), then overrides columns on
+    * the copies only. `pred <=> true`, not `pred`: a NULL predicate (a
+    * blank workbook cell) is no match, so the row is kept unchanged, as
+    * the reference's pandas `~((..)&(..))` keeps NaN rows. The predicate
+    * is evaluated once, into the tag, before any override can change the
+    * columns it reads; each override sees the earlier ones, as chained
+    * `withColumn`s would. */
+  private def generalise(
+      df: DataFrame, pred: Column, overrides: Map[String, Column],
+      keepOriginal: Boolean): DataFrame = {
+    require(overrides.keySet.subsetOf(df.columns.toSet),
+      s"overrides name columns the frame lacks: ${overrides.keySet -- df.columns}")
+    val hit = pred <=> true
+    val tagged =
+      if (keepOriginal)
+        df.withColumn(Copy, explode(when(hit, array(lit(false), lit(true))).otherwise(array(lit(false)))))
+      else df.withColumn(Copy, hit)
+    overrides.foldLeft(tagged) { case (acc, (c, v)) =>
+      acc.withColumn(c, when(col(Copy), v).otherwise(col(c)))
+    }.drop(Copy)
   }
 
   /** Gender generalisation for a gender-exclusive cancer site (reference

@@ -7,7 +7,9 @@ import org.apache.spark.sql.SparkSession
   * directory, dispatch each workbook on its filename prefix, run the
   * matching pipeline with its filename/notes-derived stamps, and
   * atomically (over)write the two modelling tables. One Spark job per
-  * sink write; everything upstream stays one lazy plan per file.
+  * table: each workbook stages as one typed scan, its pipeline stays one
+  * lazy plan over it, and the published row count is observed on the sink
+  * write instead of read back.
   */
 object Runner {
 
@@ -50,14 +52,15 @@ object Runner {
       targetGeographies: Seq[String] = Schemas.defaultTargetGeographies,
       destinations: Destinations = Destinations(),
       sinkMode: SinkMode = StagedOverwrite): Seq[LoadResult] = {
-    def publish(df: org.apache.spark.sql.DataFrame, dest: String): Long = sinkMode match {
-      case StagedOverwrite =>
-        Sink.overwriteTable(df, dest)
-        spark.read.parquet(dest).count()
-      case ManifestPointer =>
-        Sink.Manifest.overwrite(spark, dest,
-          df.withColumn("_TIMESTAMP", org.apache.spark.sql.functions.current_timestamp()))
-        Sink.Manifest.read(spark, dest).count()
+    def publish(df: org.apache.spark.sql.DataFrame, dest: String): Long = {
+      val (observed, rows) = graft.ops.Metrics.audited(df, s"published:$dest", Nil)
+      sinkMode match {
+        case StagedOverwrite => Sink.overwriteTable(observed, dest)
+        case ManifestPointer =>
+          Sink.Manifest.overwrite(spark, dest,
+            observed.withColumn("_TIMESTAMP", org.apache.spark.sql.functions.current_timestamp()))
+      }
+      rows.get("n_rows").asInstanceOf[Long]
     }
     Ingest.listStaged(stagingDir).flatMap { path =>
       val name = path.getFileName.toString

@@ -135,8 +135,8 @@ object Xlsx {
     } finally zip.close()
   }
 
-  /** Stage a sheet to CSV text lines (RFC-4180 quoting), the hand-off point
-    * into [[Staging.readSheet]] / `spark.read.csv`. */
+  /** Stage a sheet to CSV text lines (RFC-4180 quoting), the `.csv` form
+    * [[Staging.readSheet]] reads. */
   def toCsvLines(rows: Seq[Seq[Option[String]]]): Seq[String] = {
     def quote(v: String): String =
       if (v.exists(c => c == ',' || c == '"' || c == '\n')) "\"" + v.replace("\"", "\"\"") + "\""

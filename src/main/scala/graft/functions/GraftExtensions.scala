@@ -70,6 +70,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((
       FunctionIdentifier("damerau_levenshtein"),
       info("damerau_levenshtein", "damerau_levenshtein(a, b) - true Damerau-Levenshtein distance over UTF-8 bytes"),
-      es => VectorExpressions.DamerauLevenshtein(es.head, es(1))))
+      VectorExpressions.damerauLevenshteinBuilder))
   }
 }

@@ -293,6 +293,10 @@ object VectorExpressions {
     require(es.length == 1, s"md5_seeded8 expects (s), got ${es.length} args")
     Md5Seeded8(es.head)
   }
+  private[functions] val damerauLevenshteinBuilder: Seq[Expression] => Expression = { es =>
+    require(es.length == 2, s"damerau_levenshtein expects (a, b), got ${es.length} args")
+    DamerauLevenshtein(es.head, es(1))
+  }
 
   case class RollingHash31(child: Expression) extends UnaryExpression {
     override def dataType: DataType = LongType
@@ -411,7 +415,7 @@ object VectorExpressions {
     reg.createOrReplaceTempFunction("hilbert_d2", hilbertBuilder, "built-in")
     reg.createOrReplaceTempFunction("vector_l1_i64", es => VectorL1I64(es.head, es(1)), "built-in")
     reg.createOrReplaceTempFunction("vector_distsq_i64", es => VectorDistSqI64(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("damerau_levenshtein", es => DamerauLevenshtein(es.head, es(1)), "built-in")
+    reg.createOrReplaceTempFunction("damerau_levenshtein", damerauLevenshteinBuilder, "built-in")
     reg.createOrReplaceTempFunction("range_bucket_search", RangeBucketSearch.build, "built-in")
     reg.createOrReplaceTempFunction("minhash_bands8", minhashBands8Builder, "built-in")
     reg.createOrReplaceTempFunction("md5_seeded8", md5Seeded8Builder, "built-in")

@@ -489,6 +489,13 @@ object TextDedup {
 
   private val MinhashK = 8   // signature length
   private val BandSize = 2   // rows per band → 4 bands
+  // STATIC TIE: the md5_seeded8/minhash_bands8 kernels hardcode 8 seeds
+  // and 4 bands — a constant change must fail HERE, loudly, not surface as
+  // hs8.getItem(i >= 8) = null silently min'd into null signatures.
+  require(MinhashK == 8 && BandSize == 2,
+    s"md5_seeded8/minhash_bands8 kernels are built for MinhashK=8, " +
+      s"BandSize=2; got MinhashK=$MinhashK, BandSize=$BandSize — " +
+      "extend VectorKernels.md5Seeded8/minhashBands8 in lockstep")
 
   /** Shared MinHash plumbing (used by both the LSH candidate query and the
     * estimation diagnostic so the two can never drift): signature
@@ -519,13 +526,6 @@ object TextDedup {
     // per exploded shingle row; md5_seeded8 computes all eight digests in
     // one kernel call (same lowercase-hex bytes — TextDedupSpec's
     // bands-vs-aggregate pin and the unchanged oracles gate equality).
-    // STATIC TIE (ADVICE r13): the kernel hardcodes 8 seeds / 4 bands —
-    // a MinhashK/BandSize change must fail HERE, loudly, not surface as
-    // hs8.getItem(i >= 8) = null silently min'd into null signatures.
-    require(MinhashK == 8 && BandSize == 2,
-      s"md5_seeded8/minhash_bands8 kernels are built for MinhashK=8, " +
-        s"BandSize=2; got MinhashK=$MinhashK, BandSize=$BandSize — " +
-        "extend VectorKernels.md5Seeded8/minhashBands8 in lockstep")
     graft.functions.VectorExpressions.register(sh.sparkSession)
     val withHs = sh.withColumn("hs8",
       graft.functions.VectorExpressions.md5_seeded8(col("shingle")))

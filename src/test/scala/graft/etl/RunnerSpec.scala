@@ -138,4 +138,43 @@ class RunnerSpec extends SparkSpec {
     assert(adult.select("DATE_DIAGNOSIS_WINDOW").distinct().as[String].collect().toSeq === Seq("2017-2021"))
     assert(adult.count() === 2) // 1 row × 2 metrics (no England rows to generalise)
   }
+
+  test("run: every LoadResult.rows equals a direct count of the published table, both sink modes, twice") {
+    val staging = Files.createTempDirectory("graft-staging-counts")
+    val indexHeader = Schemas.rawIndexSheet.fieldNames.mkString(",")
+    Files.writeString(staging.resolve("Index_2018.csv"),
+      (1 to 10).map(i => s"preamble $i").mkString("\n") + "\n" +
+        indexHeader + "\n" +
+        "Cancer Alliance,NCL,E56000027,Breast,Female,All ages,Age-standardised,2018,1,100,71.5,70.0,73.0,1.0,0.5,\n" +
+        "Cancer Alliance,WY,E56000014,Lung,Persons,All ages,Age-standardised,2018,1,50,55.0,54.0,56.0,1.0,0.5,\n" +
+        "Sub-ICB,Islington,E38000088,Lung,Persons,All ages,Age-standardised,2018,1,10,40.0,39.0,41.0,1.0,0.5,\n")
+    val adultHeader = Schemas.rawAdultSheet.fieldNames.mkString(",")
+    Files.writeString(staging.resolve("adult_survival_2017_2021.csv"),
+      (1 to 9).map(i => s"preamble $i").mkString("\n") + "\n" +
+        adultHeader + "\n" +
+        "Cancer Alliance,NCL,E56000027,Prostate,Male,Age-standardised (5 age groups),1,100,71.0,72.0\n" +
+        "Country,England,E92000001,Breast,Female,Age-standardised (5 age groups),1,999,75.0,76.0\n")
+    for ((mode, read) <- Seq[(Runner.SinkMode, String => Long)](
+        Runner.StagedOverwrite -> (t => spark.read.parquet(t).count()),
+        Runner.ManifestPointer -> (t => Sink.Manifest.read(spark, t).count()))) {
+      val out = Files.createTempDirectory("graft-tables-counts").toString
+      // the second run on the same session reuses every observation name
+      for (_ <- 1 to 2) {
+        val results = Runner.run(spark, staging.toString, out, sinkMode = mode)
+        assert(results.map(r => r.kind -> r.rows).sorted === Seq("adult4" -> 8L, "index" -> 2L))
+        results.foreach(r => assert(r.rows === read(r.table), s"$mode ${r.table}"))
+      }
+    }
+  }
+
+  test("run: a sheet with no data rows publishes an observed count of 0") {
+    val staging = Files.createTempDirectory("graft-staging-empty")
+    val out = Files.createTempDirectory("graft-tables-empty").toString
+    Files.writeString(staging.resolve("Index_2018.csv"),
+      (1 to 10).map(i => s"preamble $i").mkString("\n") + "\n" +
+        Schemas.rawIndexSheet.fieldNames.mkString(",") + "\n")
+    val results = Runner.run(spark, staging.toString, out)
+    assert(results.map(_.rows) === Seq(0L))
+    assert(spark.read.parquet(s"$out/INDEX").count() === 0)
+  }
 }

@@ -213,4 +213,18 @@ class VectorExpressionsSpec extends SparkSpec {
       .head()
     assert(math.abs(r.getDouble(0) - r.getDouble(1) * r.getDouble(1)) < 1e-12)
   }
+
+  test("registered builders reject a wrong arity with a readable error") {
+    VectorExpressions.register(spark)
+    Seq(
+      "damerau_levenshtein('a')" -> "damerau_levenshtein expects (a, b), got 1 args",
+      "md5_seeded8('a', 'b')" -> "md5_seeded8 expects (s), got 2 args",
+      "aligned_counts(array())" -> "aligned_counts expects (entries, keys), got 1 args",
+      "marginal_counts(array(), array(), array())" -> "marginal_counts expects (entries, keys), got 3 args")
+      .foreach { case (call, msg) =>
+        val e = intercept[Exception](spark.sql(s"SELECT $call").collect())
+        assert(!e.isInstanceOf[IndexOutOfBoundsException], call)
+        assert(e.getMessage.contains(msg), s"$call: ${e.getMessage}")
+      }
+  }
 }

@@ -1,77 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
-  private val gcBeans = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala.toSeq
-  }
-  /** Cumulative stop-the-world GC time, ms. */
-  private def gcMillis: Long = gcBeans.map(b => math.max(0L, b.getCollectionTime)).sum
-  /** Cumulative process CPU time, ms (-1 if the platform bean is absent). */
-  private def cpuMillis: Long =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime / 1000000L
-      case _ => -1L
-    }
-
   /** One measured query: wall seconds (−1 = failed), the gc-pause and
     * process-CPU deltas that attribute a wall outlier to pause vs plan
-    * cost, and the shuffle bytes the query's tasks wrote (the continuous
-    * form of the point-measured ShuffleProbe: "shuffles carry band keys,
-    * not text" is now enforced by the artifact every round). */
+    * cost, and the shuffle bytes the query's tasks wrote ("shuffles carry
+    * band keys, not text" is enforced by the artifact every round). */
   final case class Row(name: String, sec: Double, gcMs: Long, cpuMs: Long,
       shuffleBytes: Long)
 
-  /** Listener tallying shuffle WRITE bytes across all completed tasks —
-    * write-side counts each shuffle exactly once (read-side would
-    * double-count reused exchanges). Deltas of the cumulative counter
-    * attribute bytes to whichever query ran between two settled reads. */
-  private final class ShuffleTally extends org.apache.spark.scheduler.SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onTaskEnd(
-        te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-    }
-    /** Listener events post asynchronously; poll until the counter holds
-      * still for one interval (bounded) so a query's trailing task-end
-      * events don't leak into the next query's delta. Runs OUTSIDE the
-      * timed window. A FAILED query gets a much longer bound (task kill
-      * can take seconds, far past the normal cap) so its stragglers
-      * can't inflate the next row's shuffle_mb — the exact attribution
-      * signal this tally exists to provide. */
-    def settledRead(maxSpins: Int = 40): Long = { // default <= ~200 ms
-      var prev = bytes.get()
-      var spins = 0
-      while (spins < maxSpins) {
-        Thread.sleep(5)
-        val cur = bytes.get()
-        if (cur == prev) return cur
-        prev = cur
-        spins += 1
-      }
-      prev
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
+    val spark = Sessions.build()
     // absorb session/executor init so it isn't billed to whichever query
     // happens to run first
     spark.range(1000).selectExpr("sum(id)").collect()
     // opt-in single-query iteration filter (the driver never sets it)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // materialize the session-shared memoized tables (LSH candidates, IVF
     // quantizer, gram universe, BPE merges, ETL processed tables) OUTSIDE
     // per-query timing: in production these are snapshot tables written by
@@ -109,32 +53,11 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
-      val sh0 = tally.settledRead()
-      val gc0 = gcMillis
-      val cpu0 = cpuMillis
-      val t0 = System.nanoTime()
-      // noop-datasource write, NOT count(): count() lets Catalyst prune the
-      // final projection, so pure-projection queries (string kernels,
-      // fingerprints…) would be timed as scan-and-count. The noop sink
-      // evaluates every output column and discards the rows.
-      val ok = try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true
-      } catch {
-        case e: Throwable => System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
+        val t = Run(spark)(fn(spark, sfDir))
+        t.failure.foreach(e => System.err.println(s"[bench] $name FAILED: ${e.getMessage}"))
+        // a failed query reports -1, never a plausible elapsed time
+        Row(name, if (t.ok) t.wallS else -1.0, t.gcMs, t.cpuMs, t.shuffleWriteBytes)
       }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      val gcMs = gcMillis - gc0
-      val cpuMs = if (cpu0 < 0) -1L else cpuMillis - cpu0
-      // a failed query's in-flight tasks may report bytes seconds later —
-      // wait them out (<= ~5 s) so they bill to this row, not the next
-      val shBytes = tally.settledRead(maxSpins = if (ok) 40 else 1000) - sh0
-      // release this query's scratch caches so storage memory doesn't
-      // accumulate across the suite (the r4 sketch-family regression);
-      // session-shared memos are not leased and survive
-      graft.ops.Caches.drain()
-      // a failed query reports -1, never a plausible elapsed time
-      Row(name, if (ok) elapsed else -1.0, gcMs, cpuMs, shBytes)
-    }
     // Self-refuting outlier pass: re-run the slowest rows once, warm, and
     // record the second timing beside the first — a transient row refutes
     // itself (retry ≪ first) while a real plan cost reproduces. Coverage
@@ -145,20 +68,12 @@ object Bench {
     // the honest single-pass numbers.
     val retries = retrySelection(results)
       .map { r =>
-        val t0 = System.nanoTime()
-        // same measurement discipline as the first pass: failure reports
-        // -1 (a quick throw must not masquerade as a fast retry and
-        // "refute" a real regression), and the cache drain runs OUTSIDE
-        // the timed window, exactly like the main loop
-        val ok = try {
-          SparkEntry.queries(r.name)(spark, sfDir).write.format("noop").mode("overwrite").save(); true
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] retry ${r.name} FAILED: ${e.getMessage}"); false
-        }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        graft.ops.Caches.drain()
-        r.name -> (if (ok) elapsed else -1.0)
+        // same measurement as the first pass: a failure reports -1 (a
+        // quick throw must not masquerade as a fast retry and "refute" a
+        // real regression)
+        val t = Run(spark)(SparkEntry.queries(r.name)(spark, sfDir))
+        t.failure.foreach(e => System.err.println(s"[bench] retry ${r.name} FAILED: ${e.getMessage}"))
+        r.name -> (if (t.ok) t.wallS else -1.0)
       }
     val (total, failed, gcTotal) = totals(results)
     val heapMax = Runtime.getRuntime.maxMemory / (1024 * 1024)

@@ -11,7 +11,7 @@ object Tables {
     *
     * `spark.read.parquet` re-infers the schema (footer read + merge) on
     * EVERY call — measured ~100–125 ms warm per call on this testdata
-    * vs ~20 ms with the schema supplied (r14 RelProbe) — and the suite
+    * vs ~20 ms with the schema supplied (OPTIMIZATION_r14 Change 6) — and the suite
     * makes hundreds of such calls per pass, so schema RE-inference
     * alone was tens of seconds of bench wall. Production registers
     * these inputs once as catalog tables, whose whole point is

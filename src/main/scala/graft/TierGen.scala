@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Generator for the persisted derived 10× tier ("sf1-derived") that
-  * [[DedupScaleProbe]], [[ErScaleProbe]] and the stretch oracle runs
-  * read (VERDICT r11 #3: the probes used to derive their tier
+  * `Probe tiers` (the dedup, er and sim sets) and the stretch oracle
+  * runs read (VERDICT r11 #3: the probes used to derive their tier
   * in-process per run, so the measured factors were reproducible only
   * method-wise, not byte-wise). One `runMain graft.TierGen` writes the
   * tier once under `derived/sf1` (repo-local, gitignored — ~500 MB of
@@ -256,13 +256,7 @@ object TierGen {
   def main(args: Array[String]): Unit = {
     val tier = args.headOption.getOrElse(defaultTier)
     val copies = if (args.length > 1) args(1).toInt else 10
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.build(8)
     ensureAll(spark, tier, copies)
     println(s"TIER $tier complete")
     spark.stop()

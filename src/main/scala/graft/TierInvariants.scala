@@ -394,13 +394,7 @@ object TierInvariants {
 
   def main(args: Array[String]): Unit = {
     val tier = args.headOption.getOrElse(TierGen.defaultTier)
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.build(16)
     var bad = 0L
     checks(spark, tier).foreach { case (name, f) =>
       val t0 = System.nanoTime()

@@ -37,6 +37,7 @@ object Staging {
       .schema(schema)
       .option("header", "true")
       .option("nullValue", "")
+      .option("escape", "\"") // RFC-4180: a quote inside a quoted cell is doubled
       .csv(lines)
   }
 

@@ -58,13 +58,24 @@ object Xlsx {
     } finally zip.close()
   }
 
+  /** A workbook that cannot be read as the named sheet: not a zip (or a
+    * truncated one), or missing a part or a shared string it refers to. */
+  final class XlsxException(val path: String, val sheet: String, detail: String,
+      cause: Throwable = null)
+      extends IllegalArgumentException(s"$path, sheet '$sheet': $detail", cause)
+
   /** Read one sheet as rows of optional cell strings, positionally aligned
-    * (row i, column j); absent cells are None. */
+    * (row i, column j); absent cells are None. Any unreadable input raises
+    * an [[XlsxException]] naming the file and the sheet. */
   def readSheet(path: String, sheetName: String): Seq[Seq[Option[String]]] = {
-    val zip = new ZipFile(path)
+    def bad(detail: String, cause: Throwable = null) =
+      new XlsxException(path, sheetName, detail, cause)
+    val zip = try new ZipFile(path) catch {
+      case e: java.io.IOException => throw bad(s"not a readable zip ($e)", e)
+    }
     try {
       val wb = slurp(zip, "xl/workbook.xml").getOrElse(
-        throw new IllegalArgumentException(s"$path: not an xlsx (no xl/workbook.xml)"))
+        throw bad("not an xlsx (no xl/workbook.xml)"))
       // match each <sheet> element first, then pull name and r:id with
       // independent attribute regexes — non-Excel producers emit the two
       // attributes in either order (mirrors the Relationship fallback below)
@@ -79,23 +90,26 @@ object Xlsx {
           } yield (n, r)
         }
         .collectFirst { case (n, r) if n == sheetName => r }
-        .getOrElse(throw new IllegalArgumentException(s"sheet '$sheetName' not found in $path"))
+        .getOrElse(throw bad("sheet not found"))
       val rels = slurp(zip, "xl/_rels/workbook.xml.rels").getOrElse("")
       val target = (s"""<Relationship\\b[^>]*Id="$rid"[^>]*Target="([^"]*)"""").r
         .findFirstMatchIn(rels).map(_.group(1))
         .orElse((s"""<Relationship\\b[^>]*Target="([^"]*)"[^>]*Id="$rid"""").r
           .findFirstMatchIn(rels).map(_.group(1)))
-        .getOrElse(throw new IllegalArgumentException(s"no relationship for $rid"))
+        .getOrElse(throw bad(s"no relationship for $rid"))
       val sheetPath = if (target.startsWith("/")) target.drop(1) else s"xl/$target"
-      val shared: IndexedSeq[String] = slurp(zip, "xl/sharedStrings.xml") match {
-        case Some(ss) =>
-          """(?s)<si>(.*?)</si>""".r.findAllMatchIn(ss)
-            .map(m => tRe.findAllMatchIn(m.group(1)).map(t => unescape(t.group(1))).mkString)
-            .toIndexedSeq
-        case None => IndexedSeq.empty
+      val sharedXml = slurp(zip, "xl/sharedStrings.xml")
+      val shared: IndexedSeq[String] = sharedXml.toIndexedSeq.flatMap { ss =>
+        """(?s)<si>(.*?)</si>""".r.findAllMatchIn(ss)
+          .map(m => tRe.findAllMatchIn(m.group(1)).map(t => unescape(t.group(1))).mkString)
       }
-      val xml = slurp(zip, sheetPath).getOrElse(
-        throw new IllegalArgumentException(s"missing $sheetPath"))
+      def sharedString(v: String): String = {
+        val i = try v.trim.toInt catch { case _: NumberFormatException => -1 }
+        if (i >= 0 && i < shared.length) shared(i)
+        else if (sharedXml.isEmpty) throw bad(s"shared string '$v' but no xl/sharedStrings.xml")
+        else throw bad(s"shared string '$v' out of range (${shared.length} strings)")
+      }
+      val xml = slurp(zip, sheetPath).getOrElse(throw bad(s"missing part $sheetPath"))
 
       // Excel omits fully-empty rows from the XML entirely; honor each row's
       // r attribute and pad the gaps, or every positional consumer
@@ -117,7 +131,7 @@ object Xlsx {
           nextIdx = idx + 1
           val t = typeRe.findFirstMatchIn(attrs).map(_.group(1)).getOrElse("")
           val value: Option[String] = t match {
-            case "s" => vRe.findFirstMatchIn(body).map(m => shared(unescape(m.group(1)).trim.toInt))
+            case "s" => vRe.findFirstMatchIn(body).map(m => sharedString(unescape(m.group(1))))
             case "inlineStr" => tRe.findFirstMatchIn(body).map(m => unescape(m.group(1)))
             case _ => vRe.findFirstMatchIn(body).map(m => unescape(m.group(1)))
           }
@@ -132,6 +146,8 @@ object Xlsx {
         })
       }
       out.toSeq
+    } catch {
+      case e: java.io.IOException => throw bad(s"unreadable zip entry ($e)", e)
     } finally zip.close()
   }
 

@@ -96,40 +96,18 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("run: xlsx adult workbook parses Table 4 AND the Notes snapshot (row 12 cell)") {
-    import java.util.zip.{ZipEntry, ZipOutputStream}
     val staging = Files.createTempDirectory("graft-staging-xlsx")
     val out = Files.createTempDirectory("graft-tables-xlsx").toString
-    val wb = staging.resolve("adult_cancer_survival_2017_2021.xlsx")
-    val zos = new ZipOutputStream(Files.newOutputStream(wb))
-    def entry(name: String, content: String): Unit = {
-      zos.putNextEntry(new ZipEntry(name)); zos.write(content.getBytes("UTF-8")); zos.closeEntry()
-    }
-    def inlineRow(r: Int, cells: Seq[String]) =
-      s"""<row r="$r">""" + cells.zipWithIndex.collect {
-        case (v, i) if v.nonEmpty =>
-          s"""<c r="${('A' + i).toChar}$r" t="inlineStr"><is><t>$v</t></is></c>"""
-      }.mkString + "</row>"
-    entry("xl/workbook.xml",
-      """<workbook><sheets><sheet name="Table 4" sheetId="1" r:id="rId1"/>
-        |<sheet name="Notes and definitions" sheetId="2" r:id="rId2"/></sheets></workbook>""".stripMargin)
-    entry("xl/_rels/workbook.xml.rels",
-      """<Relationships><Relationship Id="rId1" Type="w" Target="worksheets/sheet1.xml"/>
-        |<Relationship Id="rId2" Type="w" Target="worksheets/sheet2.xml"/></Relationships>""".stripMargin)
-    val adultHeader = Schemas.rawAdultSheet.fieldNames.toSeq
-    entry("xl/worksheets/sheet1.xml",
-      "<worksheet><sheetData>" +
-        (1 to 9).map(i => inlineRow(i, Seq(s"preamble $i"))).mkString +
-        inlineRow(10, adultHeader) +
-        inlineRow(11, Seq("Cancer Alliance", "NCL", "E56000027", "Breast", "Female",
-          "Age-standardised (5 age groups)", "1", "100", "71.0", "72.0")) +
-        "</sheetData></worksheet>")
-    entry("xl/worksheets/sheet2.xml",
-      "<worksheet><sheetData>" +
-        (1 to 10).map(i => inlineRow(i, Seq(s"notes preamble $i"))).mkString +
-        inlineRow(11, Seq("Methodology")) + // header row under skiprows=10
-        inlineRow(12, Seq("Figures are based on data extracted in December 2023 snapshot")) +
-        "</sheetData></worksheet>")
-    zos.close()
+    import TestWorkbook.row
+    TestWorkbook.workbook(
+      "Table 4" -> ((1 to 9).map(i => row(s"preamble $i")) ++ Seq(
+        row(Schemas.rawAdultSheet.fieldNames.toSeq: _*),
+        row("Cancer Alliance", "NCL", "E56000027", "Breast", "Female",
+          "Age-standardised (5 age groups)", "1", "100", "71.0", "72.0"))),
+      "Notes and definitions" -> ((1 to 10).map(i => row(s"notes preamble $i")) ++ Seq(
+        row("Methodology"), // header row under skiprows=10
+        row("Figures are based on data extracted in December 2023 snapshot"))))(
+      staging.resolve("adult_cancer_survival_2017_2021.xlsx"))
 
     val results = Runner.run(spark, staging.toString, out)
     assert(results.map(_.kind) === Seq("adult4"))

@@ -2,7 +2,6 @@ package graft.etl
 
 import graft.SparkSpec
 import java.nio.file.{Files, Path}
-import java.util.zip.{ZipEntry, ZipOutputStream}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
@@ -54,28 +53,7 @@ class StagingSpec extends SparkSpec {
     assert(row.getAs[String]("NCL_QUARTILE") === "-") // cohort < 4
   }
 
-  /** A one-sheet workbook of inline-string cells; None leaves a cell out,
-    * and an empty row is left out of the XML, as Excel does. */
-  private def workbook(rows: Seq[Seq[Option[String]]]): Path = {
-    val path = Files.createTempFile("graft-staging", ".xlsx")
-    val zos = new ZipOutputStream(Files.newOutputStream(path))
-    def entry(name: String, content: String): Unit = {
-      zos.putNextEntry(new ZipEntry(name)); zos.write(content.getBytes("UTF-8")); zos.closeEntry()
-    }
-    def esc(v: String) = v.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-    entry("xl/workbook.xml",
-      """<workbook><sheets><sheet name="S" sheetId="1" r:id="rId1"/></sheets></workbook>""")
-    entry("xl/_rels/workbook.xml.rels",
-      """<Relationships><Relationship Id="rId1" Type="w" Target="worksheets/sheet1.xml"/></Relationships>""")
-    entry("xl/worksheets/sheet1.xml", "<worksheet><sheetData>" +
-      rows.zipWithIndex.filter(_._1.exists(_.isDefined)).map { case (cells, r) =>
-        s"""<row r="${r + 1}">""" + cells.zipWithIndex.collect { case (Some(v), i) =>
-          s"""<c r="${('A' + i).toChar}${r + 1}" t="inlineStr"><is><t>${esc(v)}</t></is></c>"""
-        }.mkString + "</row>"
-      }.mkString + "</sheetData></worksheet>")
-    zos.close()
-    path
-  }
+  private def workbook(rows: TestWorkbook.Rows): Path = TestWorkbook.workbook("S" -> rows)()
 
   private def sameRows(a: DataFrame, b: DataFrame): Unit = {
     assert(a.schema === b.schema)
@@ -109,6 +87,7 @@ class StagingSpec extends SparkSpec {
       row(" "),                                     // single-space first cell
       row("   spaced", " 7", " 8.5 ", ""),
       row("long row", "2024", "4.0", "n", "extra"), // longer than the schema
+      row("quoted", "2025", "5.0", "say \"hi\""),     // RFC-4180 doubled quotes in CSV
       Seq(Some("\t")))                              // tab is not blank to the CSV reader
     val xlsx = workbook(sheet)
     val csv = Files.createTempFile("graft-staging", ".csv")
@@ -122,11 +101,10 @@ class StagingSpec extends SparkSpec {
     assert(byName("short").isNullAt(2) && byName("short").isNullAt(3))
     assert(byName("Cancer, other").getString(3) === "a, b")
     assert(!byName.contains("name"), "rows equal to the header are dropped")
+    assert(byName("quoted").getString(3) === "say \"hi\"")
   }
 
   test("readXlsxSheet keeps embedded double quotes verbatim") {
-    // the CSV reader's default escape is a backslash, so an RFC-4180
-    // doubled quote staged through CSV came back as `"say ""hi"""`;
     // typed staging returns the cell as pandas' read_excel does
     val schema = StructType(Seq(StructField("name", StringType)))
     val xlsx = workbook(Seq(Seq(Some("name")), Seq(Some("say \"hi\""))))

@@ -1,48 +1,27 @@
 package graft.etl
 
 import java.nio.file.Files
-import java.util.zip.{ZipEntry, ZipOutputStream}
 import org.scalatest.funsuite.AnyFunSuite
 
 class XlsxSpec extends AnyFunSuite {
 
-  /** Build a real two-sheet xlsx with java.util.zip (shared strings, inline
-    * strings, numbers, a skipped cell, an XML escape). */
-  private def makeWorkbook(): String = {
-    val path = Files.createTempFile("graft", ".xlsx")
-    val zos = new ZipOutputStream(Files.newOutputStream(path))
-    def entry(name: String, content: String): Unit = {
-      zos.putNextEntry(new ZipEntry(name))
-      zos.write(content.getBytes("UTF-8"))
-      zos.closeEntry()
-    }
-    entry("xl/workbook.xml",
-      """<workbook xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"><sheets>
-        |<sheet name="Table 5" sheetId="1" r:id="rId1"/>
-        |<sheet name="Notes &amp; definitions" sheetId="2" r:id="rId2"/>
-        |</sheets></workbook>""".stripMargin)
-    entry("xl/_rels/workbook.xml.rels",
-      """<Relationships>
-        |<Relationship Id="rId1" Type="ws" Target="worksheets/sheet1.xml"/>
-        |<Relationship Id="rId2" Type="ws" Target="worksheets/sheet2.xml"/>
-        |</Relationships>""".stripMargin)
-    entry("xl/sharedStrings.xml",
-      """<sst><si><t>Geography type</t></si><si><t>Survival (%)</t></si>
-        |<si><t>Cancer Alliance</t></si><si><t>rich</t><t> text</t></si></sst>""".stripMargin)
-    entry("xl/worksheets/sheet1.xml",
-      """<worksheet><sheetData>
-        |<row r="1"><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c></row>
-        |<row r="2"><c r="A2" t="s"><v>2</v></c><c r="B2"><v>71.5</v></c></row>
-        |<row r="3"><c r="B3"><v>60</v></c></row>
-        |<row r="4"><c r="A4" t="inlineStr"><is><t>inline &amp; escaped</t></is></c><c r="B4" t="s"><v>3</v></c></row>
-        |</sheetData></worksheet>""".stripMargin)
-    entry("xl/worksheets/sheet2.xml",
-      """<worksheet><sheetData>
-        |<row r="1"><c r="A1" t="inlineStr"><is><t>based on data extracted in December 2023 snapshot</t></is></c></row>
-        |</sheetData></worksheet>""".stripMargin)
-    zos.close()
-    path.toString
-  }
+  /** A real two-sheet xlsx (shared strings, inline strings, numbers, a
+    * skipped cell, an XML escape). */
+  private def makeWorkbook(): String = TestWorkbook.write(
+    TestWorkbook.parts(
+      "Table 5" ->
+        """<worksheet><sheetData>
+          |<row r="1"><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c></row>
+          |<row r="2"><c r="A2" t="s"><v>2</v></c><c r="B2"><v>71.5</v></c></row>
+          |<row r="3"><c r="B3"><v>60</v></c></row>
+          |<row r="4"><c r="A4" t="inlineStr"><is><t>inline &amp; escaped</t></is></c><c r="B4" t="s"><v>3</v></c></row>
+          |</sheetData></worksheet>""".stripMargin,
+      "Notes & definitions" -> TestWorkbook.sheet(Seq(
+        TestWorkbook.row("based on data extracted in December 2023 snapshot")))) :+
+      ("xl/sharedStrings.xml" ->
+        """<sst><si><t>Geography type</t></si><si><t>Survival (%)</t></si>
+          |<si><t>Cancer Alliance</t></si><si><t>rich</t><t> text</t></si></sst>""".stripMargin)
+  ).toString
 
   test("sheetNames lists workbook order with unescaping") {
     assert(Xlsx.sheetNames(makeWorkbook()) === Seq("Table 5", "Notes & definitions"))
@@ -58,22 +37,15 @@ class XlsxSpec extends AnyFunSuite {
   }
 
   test("sheet resolves when r:id precedes name (non-Excel attribute order)") {
-    val path = Files.createTempFile("graft-order", ".xlsx")
-    val zos = new ZipOutputStream(Files.newOutputStream(path))
-    def entry(name: String, content: String): Unit = {
-      zos.putNextEntry(new ZipEntry(name))
-      zos.write(content.getBytes("UTF-8"))
-      zos.closeEntry()
-    }
-    entry("xl/workbook.xml",
-      """<workbook><sheets>
-        |<sheet r:id="rId1" sheetId="1" name="Data"/>
-        |</sheets></workbook>""".stripMargin)
-    entry("xl/_rels/workbook.xml.rels",
-      """<Relationships><Relationship Id="rId1" Type="ws" Target="worksheets/sheet1.xml"/></Relationships>""")
-    entry("xl/worksheets/sheet1.xml",
-      """<worksheet><sheetData><row r="1"><c r="A1"><v>42</v></c></row></sheetData></worksheet>""")
-    zos.close()
+    val path = TestWorkbook.write(Seq(
+      "xl/workbook.xml" ->
+        """<workbook><sheets>
+          |<sheet r:id="rId1" sheetId="1" name="Data"/>
+          |</sheets></workbook>""".stripMargin,
+      "xl/_rels/workbook.xml.rels" ->
+        """<Relationships><Relationship Id="rId1" Type="ws" Target="worksheets/sheet1.xml"/></Relationships>""",
+      "xl/worksheets/sheet1.xml" ->
+        """<worksheet><sheetData><row r="1"><c r="A1"><v>42</v></c></row></sheetData></worksheet>"""))
     assert(Xlsx.readSheet(path.toString, "Data") === Seq(Seq(Some("42"))))
   }
 
@@ -90,33 +62,15 @@ class XlsxSpec extends AnyFunSuite {
   }
 
   test("NHS-shaped workbook → Staging.readXlsxSheet → IndexPipeline end-to-end") {
-    val path = Files.createTempFile("graft-nhs", ".xlsx")
-    val zos = new ZipOutputStream(Files.newOutputStream(path))
-    def entry(name: String, content: String): Unit = {
-      zos.putNextEntry(new ZipEntry(name)); zos.write(content.getBytes("UTF-8")); zos.closeEntry()
-    }
     val header = Schemas.rawIndexSheet.fieldNames
-    def inlineRow(r: Int, cells: Seq[String]) =
-      s"""<row r="$r">""" + cells.zipWithIndex.collect {
-        case (v, i) if v.nonEmpty =>
-          val col = ('A' + i).toChar
-          s"""<c r="$col$r" t="inlineStr"><is><t>$v</t></is></c>"""
-      }.mkString + "</row>"
-    entry("xl/workbook.xml",
-      """<workbook><sheets><sheet name="Table 5" sheetId="1" r:id="rId1"/></sheets></workbook>""")
-    entry("xl/_rels/workbook.xml.rels",
-      """<Relationships><Relationship Id="rId1" Type="ws" Target="worksheets/sheet1.xml"/></Relationships>""")
-    entry("xl/worksheets/sheet1.xml",
-      "<worksheet><sheetData>" +
-        inlineRow(1, Seq("Cancer Survival in England preamble")) +
-        inlineRow(2, Seq("")) +
-        inlineRow(3, header.toSeq) +
-        inlineRow(4, Seq("Cancer Alliance", "NCL", "E56000027", "Breast", "Female", "All ages",
-          "Age-standardised", "2018", "1", "100", "71.5", "70.0", "73.0", "1.0", "0.5", "")) +
-        inlineRow(5, Seq("Sub-ICB", "Islington", "E38000088", "Lung", "Persons", "All ages",
-          "Age-standardised", "2018", "1", "10", "40.0", "39.0", "41.0", "1.0", "0.5", "")) +
-        "</sheetData></worksheet>")
-    zos.close()
+    val path = TestWorkbook.workbook("Table 5" -> Seq(
+      TestWorkbook.row("Cancer Survival in England preamble"),
+      TestWorkbook.row(),
+      TestWorkbook.row(header.toSeq: _*),
+      TestWorkbook.row("Cancer Alliance", "NCL", "E56000027", "Breast", "Female", "All ages",
+        "Age-standardised", "2018", "1", "100", "71.5", "70.0", "73.0", "1.0", "0.5", ""),
+      TestWorkbook.row("Sub-ICB", "Islington", "E38000088", "Lung", "Persons", "All ages",
+        "Age-standardised", "2018", "1", "10", "40.0", "39.0", "41.0", "1.0", "0.5", "")))()
 
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
@@ -132,21 +86,8 @@ class XlsxSpec extends AnyFunSuite {
   }
 
   test("rows absent from the XML (Excel drops blank rows) pad as empty — positions hold") {
-    val path = Files.createTempFile("graft-gaps", ".xlsx")
-    val zos = new ZipOutputStream(Files.newOutputStream(path))
-    def entry(name: String, content: String): Unit = {
-      zos.putNextEntry(new ZipEntry(name)); zos.write(content.getBytes("UTF-8")); zos.closeEntry()
-    }
-    entry("xl/workbook.xml",
-      """<workbook><sheets><sheet name="S" sheetId="1" r:id="rId1"/></sheets></workbook>""")
-    entry("xl/_rels/workbook.xml.rels",
-      """<Relationships><Relationship Id="rId1" Type="w" Target="worksheets/sheet1.xml"/></Relationships>""")
-    entry("xl/worksheets/sheet1.xml",
-      """<worksheet><sheetData>
-        |<row r="1"><c r="A1" t="inlineStr"><is><t>first</t></is></c></row>
-        |<row r="4"><c r="A4" t="inlineStr"><is><t>fourth</t></is></c></row>
-        |</sheetData></worksheet>""".stripMargin)
-    zos.close()
+    val path = TestWorkbook.workbook("S" -> Seq(
+      TestWorkbook.row("first"), TestWorkbook.row(), TestWorkbook.row(), TestWorkbook.row("fourth")))()
     val rows = Xlsx.readSheet(path.toString, "S")
     assert(rows.length === 4)
     assert(rows(0) === Seq(Some("first")))
@@ -158,4 +99,37 @@ class XlsxSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](Xlsx.readSheet(makeWorkbook(), "Nope"))
     assert(e.getMessage.contains("Nope"))
   }
+
+  /** Hostile inputs: each must raise one XlsxException naming the file
+    * and the sheet, never a bare zip or index error. */
+  private val sharedCell =
+    """<worksheet><sheetData><row r="1"><c r="A1" t="s"><v>5</v></c></row></sheetData></worksheet>"""
+  private def truncated(): String = {
+    val p = TestWorkbook.write(TestWorkbook.parts("S" -> sharedCell))
+    val bytes = Files.readAllBytes(p)
+    Files.write(p, bytes.take(bytes.length / 2))
+    p.toString
+  }
+  private val hostile: Seq[(String, () => String)] = Seq(
+    "a shared-string index past the table" -> (() => TestWorkbook.write(
+      TestWorkbook.parts("S" -> sharedCell) :+
+        ("xl/sharedStrings.xml" -> "<sst><si><t>only</t></si></sst>")).toString),
+    "a shared-string cell with no sharedStrings.xml" -> (() =>
+      TestWorkbook.write(TestWorkbook.parts("S" -> sharedCell)).toString),
+    "a truncated zip" -> (() => truncated()),
+    "a file that is not a zip" -> (() =>
+      Files.writeString(TestWorkbook.temp(), "Geography type,Survival (%)\n").toString),
+    "a sheet with no relationship" -> (() => TestWorkbook.write(
+      TestWorkbook.parts("S" -> sharedCell).filterNot(_._1.endsWith(".rels"))).toString),
+    "a relationship to a missing part" -> (() => TestWorkbook.write(
+      TestWorkbook.parts("S" -> sharedCell).filterNot(_._1.startsWith("xl/worksheets/"))).toString),
+    "an absent sheet" -> (() => TestWorkbook.write(TestWorkbook.parts("T" -> sharedCell)).toString))
+
+  for ((label, make) <- hostile)
+    test(s"hostile input: $label raises an XlsxException naming file and sheet") {
+      val path = make()
+      val e = intercept[Xlsx.XlsxException](Xlsx.readSheet(path, "S"))
+      assert(e.path === path && e.sheet === "S")
+      assert(e.getMessage.contains(path) && e.getMessage.contains("'S'"), e.getMessage)
+    }
 }

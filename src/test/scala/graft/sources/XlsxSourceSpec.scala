@@ -1,9 +1,10 @@
 package graft.sources
 
 import java.nio.file.{Files, Path}
-import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import graft.SparkSpec
+import graft.etl.TestWorkbook
+import graft.etl.TestWorkbook.row
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -15,39 +16,11 @@ class XlsxSourceSpec extends SparkSpec {
 
   /** Tiny workbook: a preamble line, a header, two data rows; second sheet
     * to prove sheet selection. `suffix` varies cell payloads per file. */
-  private def makeWorkbook(dir: Path, name: String, suffix: String): String = {
-    val path = dir.resolve(name)
-    val zos = new ZipOutputStream(Files.newOutputStream(path))
-    def entry(n: String, content: String): Unit = {
-      zos.putNextEntry(new ZipEntry(n)); zos.write(content.getBytes("UTF-8")); zos.closeEntry()
-    }
-    def inline(r: Int, cells: Seq[String]) =
-      s"""<row r="$r">""" + cells.zipWithIndex.map { case (v, i) =>
-        val col = ('A' + i).toChar
-        s"""<c r="$col$r" t="inlineStr"><is><t>$v</t></is></c>"""
-      }.mkString + "</row>"
-    entry("xl/workbook.xml",
-      """<workbook xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"><sheets>
-        |<sheet name="Data" sheetId="1" r:id="rId1"/>
-        |<sheet name="Notes" sheetId="2" r:id="rId2"/>
-        |</sheets></workbook>""".stripMargin)
-    entry("xl/_rels/workbook.xml.rels",
-      """<Relationships>
-        |<Relationship Id="rId1" Type="ws" Target="worksheets/sheet1.xml"/>
-        |<Relationship Id="rId2" Type="ws" Target="worksheets/sheet2.xml"/>
-        |</Relationships>""".stripMargin)
-    entry("xl/worksheets/sheet1.xml",
-      s"""<worksheet><sheetData>
-         |${inline(1, Seq("preamble junk"))}
-         |${inline(2, Seq("area", "metric", "pct"))}
-         |${inline(3, Seq(s"London$suffix", "1yr", "71.5"))}
-         |${inline(4, Seq(s"North$suffix", "5yr", "49.1"))}
-         |</sheetData></worksheet>""".stripMargin)
-    entry("xl/worksheets/sheet2.xml",
-      s"""<worksheet><sheetData>${inline(1, Seq("notes only"))}</sheetData></worksheet>""")
-    zos.close()
-    path.toString
-  }
+  private def makeWorkbook(dir: Path, name: String, suffix: String): String =
+    TestWorkbook.workbook(
+      "Data" -> Seq(row("preamble junk"), row("area", "metric", "pct"),
+        row(s"London$suffix", "1yr", "71.5"), row(s"North$suffix", "5yr", "49.1")),
+      "Notes" -> Seq(row("notes only")))(dir.resolve(name)).toString
 
   private lazy val dir = Files.createTempDirectory("xlsx-src")
   private lazy val one = makeWorkbook(dir, "a.xlsx", "")
@@ -109,27 +82,8 @@ class XlsxSourceSpec extends SparkSpec {
   }
 
   test("duplicate header labels uniquify positionally instead of aliasing one column") {
-    val dup = dir.resolve("dup.xlsx")
-    val zos = new ZipOutputStream(Files.newOutputStream(dup))
-    def entry(n: String, content: String): Unit = {
-      zos.putNextEntry(new ZipEntry(n)); zos.write(content.getBytes("UTF-8")); zos.closeEntry()
-    }
-    def inline(r: Int, cells: Seq[String]) =
-      s"""<row r="$r">""" + cells.zipWithIndex.map { case (v, i) =>
-        val col = ('A' + i).toChar
-        s"""<c r="$col$r" t="inlineStr"><is><t>$v</t></is></c>"""
-      }.mkString + "</row>"
-    entry("xl/workbook.xml",
-      """<workbook xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"><sheets>
-        |<sheet name="Data" sheetId="1" r:id="rId1"/></sheets></workbook>""".stripMargin)
-    entry("xl/_rels/workbook.xml.rels",
-      """<Relationships><Relationship Id="rId1" Type="ws" Target="worksheets/sheet1.xml"/></Relationships>""")
-    entry("xl/worksheets/sheet1.xml",
-      s"""<worksheet><sheetData>
-         |${inline(1, Seq("Total", "Total", "area"))}
-         |${inline(2, Seq("10", "20", "London"))}
-         |</sheetData></worksheet>""".stripMargin)
-    zos.close()
+    val dup = TestWorkbook.workbook("Data" -> Seq(TestWorkbook.row("Total", "Total", "area"),
+      TestWorkbook.row("10", "20", "London")))(dir.resolve("dup.xlsx"))
     val df = spark.read.format("xlsx").option("sheet", "Data").load(dup.toString)
     assert(df.schema.fieldNames === Array("Total", "Total_1", "area"))
     // each uniquified name reads ITS OWN cell position — pre-fix both
